@@ -128,19 +128,62 @@ object Tables {
   def embeddings(s: SparkSession, d: String): DataFrame = read(s, d, "embeddings")
 }
 
-/** Memoized cached relations, keyed by (session, data dir, tag).
+/** Every persisted relation in `src/main`, with its owner and where its
+  * cache entry is released. CacheManager keys entries on the
+  * canonicalized plan, so plan-identical frames share ONE entry; every
+  * persist goes through this object (MemoSpec's source guard enforces
+  * it) so that sharing never lets one owner evict another's entry.
+  * MEMORY_AND_DISK throughout — spillable, never recompute-on-eviction
+  * storms at scale. Three owners:
   *
-  * Calling `.persist()` on a freshly built (but plan-identical) DataFrame
-  * on every query invocation works — CacheManager dedups by plan — but
-  * logs "Asked to cache already cached data" churn and leaves no single
-  * owner able to re-persist after an external cache clear. Memoizing the
-  * DataFrame object itself gives each cached relation exactly one identity:
-  * the accessor re-persists on demand if something (e.g. Bench's per-query
-  * `clearCache` isolation) dropped it. MEMORY_AND_DISK — spillable, never
-  * recompute-on-eviction storms at scale.
+  *  - '''session memo''' — [[cached]], keyed (session, data dir, tag);
+  *    the memo re-persists on access after an external `clearCache`
+  *    (Bench's per-query isolation) and holds the entry until
+  *    [[invalidate]] or that `clearCache`;
+  *  - '''op-internal session entry''' — [[ensurePersisted]], for an op
+  *    whose RETURNED lazy plan reads its own intermediate, so the op
+  *    cannot release it; the entry lives until the session's
+  *    `clearCache` (or a caller's `unpersist`);
+  *  - '''loan''' — [[leased]], scoped to one body: persisted on the
+  *    first loan of a plan, unpersisted when the last loan on that plan
+  *    ends (also on an exception), and never if the entry existed before
+  *    the first loan.
   *
-  * The map is tiny (a handful of relations x sessions per JVM) and lives
-  * for the process — fine for library use where sessions are long-lived.
+  * {{{
+  * site                                          owner       released
+  * DedupQs shingles / minhash / simhash bands,   memo        clearCache
+  *   probe grams
+  * VectorQs IVF centroids, SRP bands, PQ         memo        clearCache
+  *   codebook/cells/codes, SemDeDup cells,
+  *   k-center norms
+  * TextQs tf-idf, n-gram, BPE and DSIR counts;   memo        clearCache
+  *   q100 unigram/bigram counts
+  * StatQs q97 histogram, EventQs q111 sessions,  memo        clearCache
+  *   UdfQs q87 (type, user) pairs,
+  *   GraphQs item transitions
+  * IncrAttrTable frozen LM                       memo        invalidate on re-seed
+  * GraphOps.pageRank edges + nodes,              op entry    clearCache (the returned
+  *   GraphOps.triangleCounts und + oriented,                   plan reads them)
+  *   FunnelOps.funnel step accumulators,
+  *   MultimodalQs perceptual hashes
+  * DedupOps.connectedComponents pair stream      loan        end of the op
+  *   and the distributed loop's symmetric edges
+  * GraphOps.bfs / sssp edge relation (probe      loan        end of the op (results
+  *   and distributed loop)                                     are eager checkpoints)
+  * DocStream / VecStream / MediaStream           loan        end of admitBatch
+  *   batch relations
+  * IncrAttrTable ingestBatch / batchPlans        loan        end of the batch body
+  *   batch shingles, bands, gate flags and
+  *   resident candidates
+  * tools.MediaScale clusters                     loan        end of the rung
+  * }}}
+  *
+  * Two caches sit outside this object on purpose: the CC loop's
+  * superseded round blocks (an RDD, dropped per round in
+  * [[graft.ops.DedupOps.connectedComponentsWithRounds]]) and
+  * `VectorQs.kcenterQuery`'s two-round window (round k is released once
+  * round k+1 is materialized — a scoped loan would keep every round
+  * resident until the loop ends).
   */
 object Memo {
   private val m =
@@ -179,74 +222,61 @@ object Memo {
     * The unconditional-`persist` alternative works — CacheManager dedups —
     * but logs "Asked to cache already cached data" churn on every
     * re-invocation, which pollutes recorded bench output and would mask a
-    * real double-cache if one ever appeared. Callers own the entry's
-    * lifetime: it lives until `unpersist`/`clearCache` on the session. */
+    * real double-cache if one ever appeared. The entry lives until
+    * `unpersist`/`clearCache` on the session. */
   def ensurePersisted(df: DataFrame): DataFrame = {
     if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
       df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     df
   }
 
-  /** Reference-counted persist LEASE for callers that unpersist when done
-    * (the iterative graph ops — [[ensurePersisted]]'s callers otherwise
-    * own entries until an external `clearCache`). The naked
-    * check-then-persist + "owns iff it saw NONE" pattern races: two
-    * concurrent calls over plan-identical relations can both observe
-    * `StorageLevel.NONE`, both claim ownership, and the first to finish
-    * unpersists the SHARED CacheManager entry mid-iteration of the other
-    * (CacheManager keys on the canonicalized plan, so there is only one
-    * entry between them). The lease serializes the decision under one
-    * lock keyed on that same canonicalized plan: `acquire` persists only
-    * on the 0→1 transition, `release` unpersists only on the 1→0
-    * transition — so the entry lives exactly as long as any leaseholder
-    * and no finisher can evict a peer mid-flight. Lock scope is a plain
-    * JVM-global map (graph-op concurrency per process is tiny); the
-    * count map never grows past the set of concurrently-leased plans
-    * because 1→0 removes the key. */
-  object Lease {
-    /** Per-plan state: live lease count + whether the FIRST lease found
-      * the CacheManager entry absent and created it. `owned = false`
-      * means some longer-lived owner ([[cached]]/[[ensurePersisted]]
-      * callers, who hold entries until an external `clearCache`)
-      * persisted the plan before any lease existed — releasing the last
-      * lease must NOT evict that owner's entry (CacheManager keys on the
-      * canonicalized plan, so there is only one entry between them, and
-      * evicting it would silently force recomputation on every later use
-      * of the memoized relation). */
-    private final case class St(n: Int, owned: Boolean)
-    private val counts =
-      new java.util.HashMap[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, St]()
-    private def key(df: DataFrame) = df.queryExecution.analyzed.canonicalized
+  /** Per-plan loan state: live loan count + whether the FIRST loan found
+    * the CacheManager entry absent and created it. `owned = false` means
+    * a longer-lived owner ([[cached]]/[[ensurePersisted]]) persisted the
+    * plan first — ending the last loan must NOT evict that entry, or
+    * every later use of the memoized relation silently recomputes. */
+  private final case class Loan(n: Int, owned: Boolean)
+  private val loans =
+    new java.util.HashMap[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Loan]()
 
-    /** Take a lease on `df`'s cache entry (persisting it if this is the
-      * first lease). Pair with exactly one [[release]] on the same plan. */
-    def acquire(df: DataFrame): DataFrame = counts.synchronized {
-      val k = key(df)
-      counts.get(k) match {
+  /** Run `body` with `df` persisted, then release it. The persist/evict
+    * decision is serialized under one lock keyed on the canonicalized
+    * plan — the CacheManager's own key — so two concurrent loans over
+    * plan-identical frames (which share one entry) persist on the 0→1
+    * transition only and unpersist on the 1→0 transition only: no
+    * finisher evicts a peer mid-flight, and nested loans hold the entry
+    * until the outer one ends. The loan count map never outgrows the
+    * set of concurrently-leased plans (1→0 removes the key). */
+  def leased[A](df: DataFrame)(body: DataFrame => A): A = {
+    val k = df.queryExecution.analyzed.canonicalized
+    loans.synchronized {
+      loans.get(k) match {
         case null =>
-          // first lease: the lease owns the entry only if it creates it
           val preExisting =
             df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
           if (!preExisting) ensurePersisted(df)
-          counts.put(k, St(1, owned = !preExisting))
-        case St(n, owned) => counts.put(k, St(n + 1, owned))
+          loans.put(k, Loan(1, owned = !preExisting))
+        case Loan(n, owned) => loans.put(k, Loan(n + 1, owned))
       }
-      df
     }
-
-    /** Drop a lease; unpersists the entry when the last lease goes —
-      * unless the entry pre-existed the first lease (see [[St]]). */
-    def release(df: DataFrame): Unit = counts.synchronized {
-      val k = key(df)
-      counts.get(k) match {
-        case null => // unbalanced release — tolerate, nothing to undo
-        case St(n, owned) if n <= 1 =>
-          counts.remove(k)
+    try body(df)
+    finally loans.synchronized {
+      loans.get(k) match {
+        case Loan(n, owned) if n <= 1 =>
+          loans.remove(k)
           if (owned) df.unpersist()
-        case St(n, owned) => counts.put(k, St(n - 1, owned))
+        case Loan(n, owned) => loans.put(k, Loan(n - 1, owned))
       }
     }
   }
+
+  /** [[leased]] for an optional relation (a conf-gated side relation):
+    * `body` runs with `None` and nothing is persisted when it is absent. */
+  def leased[A](df: Option[DataFrame])(body: Option[DataFrame] => A): A =
+    df match {
+      case Some(d) => leased(d)(l => body(Some(l)))
+      case None => body(None)
+    }
 }
 
 /** Determinism helpers for oracle-exact numeric aggregation.

@@ -238,7 +238,7 @@ object DedupOps {
     * thousand rows — and the distributed loop's fixed machinery
     * (per-round eager localCheckpoints, the changed-count job, the
     * symmetric-edge persist) measured ~1.7 s even over 50 LITERAL
-    * edges (round-21 Scratch decomposition), the same +2 s constant
+    * edges (OPTIMIZATION_r21.md's CC decomposition), the same +2 s constant
     * that split [[graft.pipeline.IncrAttrTable]]'s labelDeltaShard off
     * in round 19. 200k edges ≈ a few MB collected — far inside the
     * q68 bounded-driver-action budget; a corpus whose pair stream
@@ -262,23 +262,21 @@ object DedupOps {
       edges.schema("b").dataType == org.apache.spark.sql.types.LongType
     if (bound <= 0 || bound > Int.MaxValue - 1 || !isLong)
       return connectedComponentsWithRounds(edges)._1
-    // Lease-persist the pair stream BEFORE the size probe (round-21
-    // verdict): when the probe OVERRUNS the bound, executeTake has
-    // already scanned most/all upstream partitions looking for bound+1
-    // rows — for an expensive-but-sparse pair pipeline (LSH banding +
-    // exact verify) that is a near-full pass. Persisting first turns
-    // every partition the probe touches into the fallback's
-    // materialization instead of thrown-away work (the distributed
-    // loop's `sym` union then reads the cache twice instead of
-    // recomputing the pipeline twice). In the small case the collected
-    // rows ARE the input and the lease is dropped as soon as the labels
-    // exist; `release` only evicts the entry this call created.
-    val pairs = graft.Memo.Lease.acquire(edges.select(col("a"), col("b")))
-    try {
+    // Loan the pair stream BEFORE the size probe (round-21 verdict):
+    // when the probe OVERRUNS the bound, executeTake has already scanned
+    // most/all upstream partitions looking for bound+1 rows — for an
+    // expensive-but-sparse pair pipeline (LSH banding + exact verify)
+    // that is a near-full pass. Persisting first turns every partition
+    // the probe touches into the fallback's materialization instead of
+    // thrown-away work (the distributed loop's `sym` union then reads
+    // the cache twice instead of recomputing the pipeline twice). In the
+    // small case the collected rows ARE the input and the loan ends as
+    // soon as the labels exist; it only evicts an entry it created.
+    graft.Memo.leased(edges.select(col("a"), col("b"))) { pairs =>
       val rows = pairs.limit(bound.toInt + 1).collect()
       if (rows.length <= bound) driverCc(edges.sparkSession, rows)
       else connectedComponentsWithRounds(pairs)._1
-    } finally graft.Memo.Lease.release(pairs)
+    }
   }
 
   /** Single-machine union-find over a collected edge list: union by
@@ -349,60 +347,61 @@ object DedupOps {
     def cut(df: DataFrame): DataFrame =
       if (checkpointDir.isDefined) df.checkpoint(true)
       else df.localCheckpoint(true)
-    val sym = edges.select(col("a"), col("b"))
-      .union(edges.select(col("b").as("a"), col("a").as("b")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Init folds round 1 in for free: the node list needs a keyed
-    // exchange anyway (the old form was distinct()), and since every
-    // node's initial label IS its id, the first neighbor-min is just
-    // min(neighbor id) — so start from least(id, min(b)) and skip a
-    // whole join round. On clique-ish near-dup clusters (every member
-    // adjacent to the cluster min) this alone IS the fixpoint, leaving
-    // a single confirming loop round.
-    var labels = cut(sym.groupBy(col("a"))
-      .agg(min(col("b")).as("__mn"))
-      .select(col("a").as("id"), least(col("a"), col("__mn")).as("comp")))
-    // Deterministic cleanup of SUPERSEDED rounds in both modes. Local:
-    // unpersist the blocks (GC-driven ContextCleaner unpersists land
-    // mid-job as multi-second bench noise). Reliable: delete the round's
-    // checkpoint files — Spark itself never does unless the non-default
-    // `spark.cleaner.referenceTracking.cleanCheckpoints` is on, so a long
-    // CC job would otherwise leave O(rounds x |labels|) on the cluster FS.
-    val hadoopConf = edges.sparkSession.sparkContext.hadoopConfiguration
-    def dropSuperseded(rdd: Option[org.apache.spark.rdd.RDD[_]]): Unit =
-      rdd.foreach { r =>
-        if (checkpointDir.isDefined) r.getCheckpointFile.foreach(Fs.delete(_, hadoopConf))
-        else r.unpersist(false)
+    // The returned labels are an eager checkpoint, so the symmetric edge
+    // cache is a loan that ends with the loop — on failure too.
+    graft.Memo.leased(edges.select(col("a"), col("b"))
+        .union(edges.select(col("b").as("a"), col("a").as("b")))) { sym =>
+      // Init folds round 1 in for free: the node list needs a keyed
+      // exchange anyway (the old form was distinct()), and since every
+      // node's initial label IS its id, the first neighbor-min is just
+      // min(neighbor id) — so start from least(id, min(b)) and skip a
+      // whole join round. On clique-ish near-dup clusters (every member
+      // adjacent to the cluster min) this alone IS the fixpoint, leaving
+      // a single confirming loop round.
+      var labels = cut(sym.groupBy(col("a"))
+        .agg(min(col("b")).as("__mn"))
+        .select(col("a").as("id"), least(col("a"), col("__mn")).as("comp")))
+      // Deterministic cleanup of SUPERSEDED rounds in both modes. Local:
+      // unpersist the blocks (GC-driven ContextCleaner unpersists land
+      // mid-job as multi-second bench noise). Reliable: delete the round's
+      // checkpoint files — Spark itself never does unless the non-default
+      // `spark.cleaner.referenceTracking.cleanCheckpoints` is on, so a long
+      // CC job would otherwise leave O(rounds x |labels|) on the cluster FS.
+      val hadoopConf = edges.sparkSession.sparkContext.hadoopConfiguration
+      def dropSuperseded(rdd: Option[org.apache.spark.rdd.RDD[_]]): Unit =
+        rdd.foreach { r =>
+          if (checkpointDir.isDefined) r.getCheckpointFile.foreach(Fs.delete(_, hadoopConf))
+          else r.unpersist(false)
+        }
+      var prevCp = checkpointRdd(labels)
+      var changed = 1L
+      var rounds = 0
+      while (changed > 0) {
+        val nbrMin = sym.join(labels, sym("b") === labels("id"))
+          .groupBy(sym("a").as("nid"))
+          .agg(min(col("comp")).as("nbr_comp"))
+        val stepped = labels.join(nbrMin, labels("id") === nbrMin("nid"), "left")
+          .select(col("id"), col("comp"),
+            least(col("comp"), coalesce(col("nbr_comp"), col("comp"))).as("comp1"))
+        // pointer jump: comp ← prevLabel(comp). Composing two prior-round
+        // labels still doubles the covered label-distance per round, and
+        // the lookup side is the ALREADY-CHECKPOINTED labels relation —
+        // joining against `stepped` itself would recompute it a second
+        // time every round. The left join + coalesce is belt-and-braces
+        // (every label IS a known node id).
+        val lookup = labels.select(col("id").as("lid"), col("comp").as("lcomp"))
+        val next = cut(
+          stepped.join(lookup, stepped("comp1") === lookup("lid"), "left")
+            .select(stepped("id"), stepped("comp"),
+              coalesce(least(col("lcomp"), stepped("comp1")), stepped("comp1")).as("next_comp")))
+        changed = next.filter(col("next_comp") < col("comp")).count()
+        rounds += 1
+        labels = next.select(col("id"), col("next_comp").as("comp"))
+        dropSuperseded(prevCp)
+        prevCp = checkpointRdd(next)
       }
-    var prevCp = checkpointRdd(labels)
-    var changed = 1L
-    var rounds = 0
-    while (changed > 0) {
-      val nbrMin = sym.join(labels, sym("b") === labels("id"))
-        .groupBy(sym("a").as("nid"))
-        .agg(min(col("comp")).as("nbr_comp"))
-      val stepped = labels.join(nbrMin, labels("id") === nbrMin("nid"), "left")
-        .select(col("id"), col("comp"),
-          least(col("comp"), coalesce(col("nbr_comp"), col("comp"))).as("comp1"))
-      // pointer jump: comp ← prevLabel(comp). Composing two prior-round
-      // labels still doubles the covered label-distance per round, and
-      // the lookup side is the ALREADY-CHECKPOINTED labels relation —
-      // joining against `stepped` itself would recompute it a second
-      // time every round. The left join + coalesce is belt-and-braces
-      // (every label IS a known node id).
-      val lookup = labels.select(col("id").as("lid"), col("comp").as("lcomp"))
-      val next = cut(
-        stepped.join(lookup, stepped("comp1") === lookup("lid"), "left")
-          .select(stepped("id"), stepped("comp"),
-            coalesce(least(col("lcomp"), stepped("comp1")), stepped("comp1")).as("next_comp")))
-      changed = next.filter(col("next_comp") < col("comp")).count()
-      rounds += 1
-      labels = next.select(col("id"), col("next_comp").as("comp"))
-      dropSuperseded(prevCp)
-      prevCp = checkpointRdd(next)
+      (labels, rounds)
     }
-    sym.unpersist()
-    (labels, rounds)
   }
 
   /** The materialized RDD behind an eager `checkpoint`/`localCheckpoint` —

@@ -65,12 +65,11 @@ object GraphOps {
     require(dampNum >= 0 && dampNum <= dampDen && dampDen > 0,
       s"damping $dampNum/$dampDen out of range")
 
-    // Persisted via the plan-keyed guard (graft.Memo.ensurePersisted), so
-    // re-invocations on the same edge relation reuse the session's cache
-    // entries instead of re-logging "already cached" churn. The returned
-    // `ranks` plan is LAZY and references both relations — they cannot be
-    // unpersisted here; the caller owns the cache lifetime (unpersist /
-    // clearCache once ranks are materialized).
+    // Op-internal session entries (graft.Memo.ensurePersisted): the
+    // returned `ranks` plan is LAZY and reads both relations, so no loan
+    // can end inside this op. Re-invocations on the same edge relation
+    // share the plan-keyed entries; they live until the session's
+    // clearCache.
     val e = graft.Memo.ensurePersisted(
       edges.select(col("src").cast("long").as("src"),
           col("dst").cast("long").as("dst"), col("w").cast("long").as("w"))
@@ -224,13 +223,12 @@ object GraphOps {
     val bound = driverBound(edges.sparkSession)
     if (bound <= 0 || bound > Int.MaxValue - 1)
       return bfsDistributed(eDist, seeds, maxHops)
-    // Lease-persist the deduped edge relation BEFORE the size probe
-    // (round-21 verdict): an over-bound `limit(bound+1)` probe scans
-    // most upstream partitions; persisting first hands that scan to the
-    // distributed fallback instead of throwing it away. Small case: the
-    // collected rows are the input and the lease drops right after.
-    val leased = graft.Memo.Lease.acquire(eDist)
-    try {
+    // Loan the deduped edge relation BEFORE the size probe (round-21
+    // verdict): an over-bound `limit(bound+1)` probe scans most upstream
+    // partitions; persisting first hands that scan to the distributed
+    // fallback instead of throwing it away. Small case: the collected
+    // rows are the input and the loan ends right after.
+    graft.Memo.leased(eDist) { leased =>
       val small = for {
         e <- collectIfSmall(leased, bound)
         s <- collectIfSmall(seeds.select(col("node").cast("long").as("node"))
@@ -240,7 +238,7 @@ object GraphOps {
         case Some((e, s)) => driverBfs(edges.sparkSession, e, s, maxHops)
         case None => bfsDistributed(leased, seeds, maxHops)
       }
-    } finally graft.Memo.Lease.release(leased)
+    }
   }
 
   /** Driver form of [[bfs]]: the identical layered traversal (layers
@@ -276,28 +274,30 @@ object GraphOps {
 
   /** @param eDist the already-normalized `(src, dst)` DISTINCT edge
     *   relation ([[bfs]] builds it once so the probe and the fallback
-    *   share one materialization). */
+    *   share one materialization). The partitioned edge cache is a loan:
+    *   the result is a union of eager `localCheckpoint`s, which read
+    *   nothing of it, so it is released before the result returns. */
   private def bfsDistributed(eDist: DataFrame, seeds: DataFrame,
-      maxHops: Int): DataFrame = {
-    val e = graft.Memo.ensurePersisted(eDist.repartition(col("src")))
-    var frontier = seeds.select(col("node").cast("long").as("node"))
-      .distinct().localCheckpoint(true)
-    val layers = scala.collection.mutable.ArrayBuffer((frontier, 0))
-    var reached = frontier
-    var h = 0
-    while (h < maxHops && !frontier.isEmpty) {
-      h += 1
-      val nxt = frontier.join(e, frontier("node") === e("src"))
-        .select(col("dst").as("node")).distinct()
-        .join(reached, Seq("node"), "left_anti")
-        .localCheckpoint(true)
-      layers += ((nxt, h))
-      reached = reached.union(nxt)
-      frontier = nxt
+      maxHops: Int): DataFrame =
+    graft.Memo.leased(eDist.repartition(col("src"))) { e =>
+      var frontier = seeds.select(col("node").cast("long").as("node"))
+        .distinct().localCheckpoint(true)
+      val layers = scala.collection.mutable.ArrayBuffer((frontier, 0))
+      var reached = frontier
+      var h = 0
+      while (h < maxHops && !frontier.isEmpty) {
+        h += 1
+        val nxt = frontier.join(e, frontier("node") === e("src"))
+          .select(col("dst").as("node")).distinct()
+          .join(reached, Seq("node"), "left_anti")
+          .localCheckpoint(true)
+        layers += ((nxt, h))
+        reached = reached.union(nxt)
+        frontier = nxt
+      }
+      layers.map { case (df, dist) => df.withColumn("dist", lit(dist.toLong)) }
+        .reduce(_ union _)
     }
-    layers.map { case (df, dist) => df.withColumn("dist", lit(dist.toLong)) }
-      .reduce(_ union _)
-  }
 
   /** Bounded-round WEIGHTED shortest paths (Bellman-Ford with a
     * changed-vertex frontier) — [[bfs]]'s cost-aware sibling: after R
@@ -328,10 +328,9 @@ object GraphOps {
     if (bound <= 0 || bound > Int.MaxValue - 1)
       return ssspDistributed(eAgg, seeds, rounds)
     // Same probe-then-reuse posture as [[bfs]]: the min-aggregated edge
-    // relation is lease-persisted before the size probe so an over-bound
-    // probe's scan feeds the distributed fallback.
-    val leased = graft.Memo.Lease.acquire(eAgg)
-    try {
+    // relation is loaned before the size probe so an over-bound probe's
+    // scan feeds the distributed fallback.
+    graft.Memo.leased(eAgg) { leased =>
       val small = for {
         e <- collectIfSmall(leased, bound)
         s <- collectIfSmall(seeds.select(col("node").cast("long").as("node"))
@@ -341,7 +340,7 @@ object GraphOps {
         case Some((e, s)) => driverSssp(edges.sparkSession, e, s, rounds)
         case None => ssspDistributed(leased, seeds, rounds)
       }
-    } finally graft.Memo.Lease.release(leased)
+    }
   }
 
   /** Driver form of [[sssp]]: the identical round-bounded synchronous
@@ -384,19 +383,13 @@ object GraphOps {
     *   ([[sssp]] builds it once so the probe and the fallback share one
     *   materialization). */
   private def ssspDistributed(eAgg: DataFrame, seeds: DataFrame,
-      rounds: Int): DataFrame = {
-    val ePlan = eAgg.repartition(col("src"))
-    // CacheManager entries key on the canonicalized plan, so a concurrent
-    // graph op over the same edge relation SHARES the entry. A leased
-    // persist (refcounted under one lock, [[graft.Memo.Lease]]) rather
-    // than check-then-persist ownership: the naked form let two
-    // concurrent sssp calls both observe NONE, both claim the entry, and
-    // the first finisher evict it mid-iteration of the other.
-    val e = graft.Memo.Lease.acquire(ePlan)
-    // try/finally: a failed Spark job mid-iteration must still release the
-    // lease, or the count leaks and the entry stays pinned (or a later
-    // balanced release under-counts) for the life of the process.
-    try {
+      rounds: Int): DataFrame =
+    // A loan, like [[bfsDistributed]]'s: the result is an eager
+    // localCheckpoint that reads nothing of the edge cache, so repeated
+    // sssp calls over different edge sets do not accumulate entries
+    // until an external clearCache. A concurrent graph op over the same
+    // edge relation shares the entry; the last loan to end releases it.
+    graft.Memo.leased(eAgg.repartition(col("src"))) { e =>
       var best = seeds.select(col("node").cast("long").as("node"))
         .distinct().withColumn("cost", lit(0L)).localCheckpoint(true)
       var frontier = best
@@ -416,15 +409,5 @@ object GraphOps {
         frontier = improved
       }
       best
-    } finally {
-      // Unlike bfs/pageRank (whose RETURNED plan still references the
-      // cached edge relation, so the caller owns the entry), the result is
-      // an eager localCheckpoint — nothing downstream reads `e`, so the
-      // entry is released here and repeated sssp calls over different edge
-      // sets do not accumulate MEMORY_AND_DISK entries until an external
-      // clearCache. The lease unpersists only when the LAST concurrent
-      // holder releases — and only if the lease created the entry.
-      graft.Memo.Lease.release(e)
     }
-  }
 }

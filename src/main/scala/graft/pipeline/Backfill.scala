@@ -128,7 +128,6 @@ object Backfill {
       clusterMasterBy match {
         case Some(sortCol) => graft.ops.SinkOps.rangedSortedParquet(
           master, sortCol, s"$outDir/$parquetName",
-          parts = 0, // AQE sizes the file count from the data
           maxRecordsPerFile = masterMaxRecordsPerFile)
         case None =>
           master.write.mode(SaveMode.Overwrite).parquet(s"$outDir/$parquetName")

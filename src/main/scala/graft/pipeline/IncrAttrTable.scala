@@ -338,36 +338,35 @@ object IncrAttrTable {
       Fs.writeAtomic(s"${metaDir(root)}/_inflight",
         eff.toString.getBytes("UTF-8"), hconf(s))
 
-      val (attrs, newSh, newBands, dupPairs, done) =
-        batchPlans(s, root, docs, broadcastProbe, eff)
-      try {
-      // CLUSTER LABELS (round 19): fold this batch's verified dup pairs
-      // into the incrementally-maintained component labels BEFORE the
-      // concurrent writes (the delta is computed eagerly — collected on
-      // the driver in the shard form, localCheckpointed by the CC loop
-      // in the corpus form — so the labels write below is a pure replay
-      // of materialized rows and never races the index writes it reads
-      // nothing from). See [[labelDelta]] for the union-find shape.
-      val labels = labelDelta(s, root, dupPairs, eff, bMin, broadcastProbe)
-      // The three writes are INDEPENDENT jobs — attrs reads the resident
-      // index through file indexes snapshotted at plan time, filtered
-      // batch_id < eff, so it can never observe the concurrent eff
-      // slices — and each is idempotent per batchId, so they run
-      // concurrently: per-append wall time pays max(write) + plans, not
-      // the sum of three sequential job+commit overheads. The manifest
-      // commits LAST, only after all three writes succeed — a crash
-      // before it leaves an uncommitted batch whose replay overwrites
-      // exactly its own partitions.
-      //
-      // All three are plain LEAF-DIRECTORY overwrites of this batch's
-      // own dir — index slices into the TAIL ([[IndexLayout
-      // .appendTailSlice]]: the dynamic-partition form re-listed the
-      // whole accumulated tree per append and fanned the batch into one
-      // file per touched bucket, both of which grow with exactly the
-      // things an append must be independent of), attrs into
-      // `attrs/batch_id=N` for the same reason. Compaction folds the
-      // index tail into real buckets; attrs batch dirs are the
-      // artifact's natural ingest grain.
+      batchPlans(s, root, docs, broadcastProbe, eff) {
+          (attrs, newSh, newBands, dupPairs) =>
+        // CLUSTER LABELS (round 19): fold this batch's verified dup pairs
+        // into the incrementally-maintained component labels BEFORE the
+        // concurrent writes (the delta is computed eagerly — collected on
+        // the driver in the shard form, localCheckpointed by the CC loop
+        // in the corpus form — so the labels write below is a pure replay
+        // of materialized rows and never races the index writes it reads
+        // nothing from). See [[labelDelta]] for the union-find shape.
+        val labels = labelDelta(s, root, dupPairs, eff, bMin, broadcastProbe)
+        // The three writes are INDEPENDENT jobs — attrs reads the resident
+        // index through file indexes snapshotted at plan time, filtered
+        // batch_id < eff, so it can never observe the concurrent eff
+        // slices — and each is idempotent per batchId, so they run
+        // concurrently: per-append wall time pays max(write) + plans, not
+        // the sum of three sequential job+commit overheads. The manifest
+        // commits LAST, only after all three writes succeed — a crash
+        // before it leaves an uncommitted batch whose replay overwrites
+        // exactly its own partitions.
+        //
+        // All three are plain LEAF-DIRECTORY overwrites of this batch's
+        // own dir — index slices into the TAIL ([[IndexLayout
+        // .appendTailSlice]]: the dynamic-partition form re-listed the
+        // whole accumulated tree per append and fanned the batch into one
+        // file per touched bucket, both of which grow with exactly the
+        // things an append must be independent of), attrs into
+        // `attrs/batch_id=N` for the same reason. Compaction folds the
+        // index tail into real buckets; attrs batch dirs are the
+        // artifact's natural ingest grain.
         val attrsDir = s"${liveRelDir(s, root, "attrs")}/batch_id=$eff"
         // the labels write joins only when the batch discovered pairs or
         // merges — committed label dirs always hold rows (the compactRel
@@ -384,7 +383,7 @@ object IncrAttrTable {
             newSh.filter(size(col("shingles")) > 0),
             indexDir(root), "shingles", eff)) ++ labelWrites): _*)
         commitBatch(s, root, eff, bMax)
-      } finally done()
+      }
     }
 
   /** Shared append envelope: manifest read, crash-residue sweep,
@@ -519,148 +518,121 @@ object IncrAttrTable {
         else IndexLayout.initMeta(s, idx)
       def hinted(df: DataFrame): DataFrame =
         if (broadcastProbe) broadcast(df) else df
-      // optional language gate FIRST, then the quality gate — both
-      // DocStream's confs and semantics verbatim (IngestSpec pins the
-      // fused loop equals DocStream-then-tagging, so the precedence
-      // wrong_lang → low_quality → dup_corpus → dup_batch → new must be
-      // identical): rejected docs are excluded from scoring/shingling,
-      // so they produce no candidates, classify as nothing but their
-      // gate status, and never enter the index
-      val wrongLang: Option[DataFrame] =
-        s.conf.getOption(graft.streaming.DocStream.LangAllowConfKey)
-          .map { csv =>
-            val allow = csv.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-            TextOps.langIdScoresOf(docs)
-              .filter(!col("pred_lang").isin(allow: _*))
-              .select(col("doc_id")).persist()
-          }
-      val postLang = wrongLang.fold(docs)(w =>
-        docs.join(w, Seq("doc_id"), "left_anti"))
-      val lowQ: Option[DataFrame] =
-        s.conf.getOption(graft.streaming.DocStream.MinScoreConfKey)
-          .map(_.toLong).map { m =>
-            TextOps.modelScoresOf(postLang).filter(col("score") <= m)
-              .select(col("doc_id")).persist()
-          }
-      val eligible = lowQ.fold(postLang)(l =>
-        postLang.join(l, Seq("doc_id"), "left_anti"))
-      val newSh = DedupQs.shinglesOf(eligible).persist()
-      val newBands = DedupQs.minhashBandsOf(newSh).persist()
-      var cands: DataFrame = null
-      try {
-        // the fused loop consumes only the dup IDS: admitted survivors
-        // are mutually non-dup by construction (admission drops every
-        // doc with a surviving J >= 0.8 partner), so the survivor-index
-        // artifact's clusters are all singletons and label maintenance
-        // ([[labelDelta]]) has nothing to record on this path
-        val (pairsResident, pairsBatch, c) =
-          dupProbe(s, root, nb, newSh, newBands, broadcastProbe, eff)
-        val dupResident = dupIdsOf(pairsResident)
-        val dupBatch = dupIdsOf(pairsBatch)
-        cands = c
-        val withWl = wrongLang match {
-          case Some(w) => docs.select("doc_id")
-            .join(hinted(w.withColumn("__wl", lit(true))), Seq("doc_id"), "left")
-          case None => docs.select("doc_id")
-            .withColumn("__wl", lit(null).cast("boolean"))
-        }
-        val withLq = lowQ match {
-          case Some(l) => withWl
-            .join(hinted(l.withColumn("__lq", lit(true))), Seq("doc_id"), "left")
-          case None => withWl
-            .withColumn("__lq", lit(null).cast("boolean"))
-        }
-        withLq
-          .join(hinted(dupResident.withColumn("__dc", lit(true))),
-            Seq("doc_id"), "left")
-          .join(hinted(dupBatch.withColumn("__db", lit(true))),
-            Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            when(col("__wl"), "wrong_lang")
-              .when(col("__lq"), "low_quality")
-              .when(col("__dc"), "dup_corpus")
-              .when(col("__db"), "dup_batch")
-              .otherwise("new").as("status"))
-          .write.mode("overwrite")
-          .parquet(s"${liveRelDir(s, root, "admissions")}/batch_id=$eff")
-        // re-read the just-committed verdicts: breaks the plan lineage to
-        // the index (Spark refuses to overwrite a path its plan reads)
-        // and makes every later write a pure function of on-disk state
-        val admitted = s.read.parquet(liveRelDir(s, root, "admissions"))
-          .filter(col("batch_id") === eff && col("status") === "new")
-          .select("doc_id")
-        if (admitted.isEmpty) {
-          // everything dropped: the admissions verdicts + manifest ARE
-          // the batch's committed state (no attrs dir, no index slices,
-          // no LM — exactly what admission-then-tagging would leave)
-          commitBatch(s, root, eff, bMax)
-        } else {
-          val survivors = docs.join(hinted(admitted), "doc_id")
-          // the frozen LM seeds from the first batch that ADMITS
-          // anything: "no committed batch has an attrs partition yet"
-          // (a committed manifest without attrs = a zero-survivor batch).
-          // Committed evidence survives compaction in three forms: the
-          // cumulative manifest's lmSeeded flag, the folded batch_id=-1
-          // attrs slice, and (for the crash window where manifests fold
-          // before attrs do) any attrs dir at or below the folded max —
-          // a batch id can only have an attrs dir if it committed one.
-          val cum = cumulative(s, root)
-          val cumMax = cum.map(_.maxBatch).getOrElse(Long.MinValue)
-          val tagged = cum.exists(_.lmSeeded) ||
-            Fs.list(liveRelDir(s, root, "attrs"), hconf(s)).exists { st =>
-              val n = st.getPath.getName
-              n == "batch_id=-1" || (n.startsWith("batch_id=") &&
-                n.stripPrefix("batch_id=").toLongOption.exists(id =>
-                  id >= 0 && (meta.contains(id) || id <= cumMax)))
+      // the admission gates ([[graft.streaming.DocStream.gated]]: the
+      // language gate, then the quality gate) are DocStream's confs and
+      // semantics verbatim — IngestSpec pins the fused loop equals
+      // DocStream-then-tagging, so the precedence wrong_lang →
+      // low_quality → dup_corpus → dup_batch → new must be identical
+      graft.streaming.DocStream.gated(docs) { (wrongLang, lowQ, eligible) =>
+        withBatchBands(eligible) { (newSh, newBands) =>
+          // the fused loop consumes only the dup IDS: admitted survivors
+          // are mutually non-dup by construction (admission drops every
+          // doc with a surviving J >= 0.8 partner), so the survivor-index
+          // artifact's clusters are all singletons and label maintenance
+          // ([[labelDelta]]) has nothing to record on this path
+          dupProbe(s, root, nb, newSh, newBands, broadcastProbe, eff) {
+              (pairsResident, pairsBatch) =>
+            val dupResident = dupIdsOf(pairsResident)
+            val dupBatch = dupIdsOf(pairsBatch)
+            val withWl = wrongLang match {
+              case Some(w) => docs.select("doc_id")
+                .join(hinted(w.withColumn("__wl", lit(true))), Seq("doc_id"), "left")
+              case None => docs.select("doc_id")
+                .withColumn("__wl", lit(null).cast("boolean"))
             }
-          if (!tagged) seedLm(s, root, survivors)
-          val attrs = attrRows(s, root, survivors, None, broadcastProbe)
-          val keepSh = newSh.join(hinted(admitted), "doc_id")
-          val keepBands = newBands.join(hinted(admitted), "doc_id")
-          val attrsDir = s"${liveRelDir(s, root, "attrs")}/batch_id=$eff"
-          // optional per-batch context-window emission (q146's chunking,
-          // ONE shared definition — TextOps.contextWindowsOf — so the
-          // streamed union over admitted batches equals the batch answer
-          // over the admitted corpus; IngestSpec pins it). Windows are
-          // per-doc local, so the step is embarrassingly incremental;
-          // conf-gated (default off) because it roughly doubles the
-          // batch's output bytes, a cost only window-training consumers
-          // should pay. Idempotent like every write here (per-batch-dir
-          // overwrite); windows are a dataset OUTPUT artifact, so
-          // compaction leaves its per-batch shards in place (they are
-          // the natural training-shard layout) — replays after
-          // compaction are no-ops at openBatch and never touch them.
-          val emitWindows =
-            s.conf.getOption(EmitWindowsKey).exists(_.toBoolean)
-          val windowWrites: Seq[() => Unit] =
-            if (!emitWindows) Seq.empty
-            else Seq(() => TextOps.contextWindowsOf(survivors)
+            val withLq = lowQ match {
+              case Some(l) => withWl
+                .join(hinted(l.withColumn("__lq", lit(true))), Seq("doc_id"), "left")
+              case None => withWl
+                .withColumn("__lq", lit(null).cast("boolean"))
+            }
+            withLq
+              .join(hinted(dupResident.withColumn("__dc", lit(true))),
+                Seq("doc_id"), "left")
+              .join(hinted(dupBatch.withColumn("__db", lit(true))),
+                Seq("doc_id"), "left")
+              .select(col("doc_id"),
+                when(col("__wl"), "wrong_lang")
+                  .when(col("__lq"), "low_quality")
+                  .when(col("__dc"), "dup_corpus")
+                  .when(col("__db"), "dup_batch")
+                  .otherwise("new").as("status"))
               .write.mode("overwrite")
-              .parquet(s"${liveRelDir(s, root, "windows")}/batch_id=$eff"))
-          awaitAll((Seq[() => Unit](
-            () => attrs.write.mode("overwrite").parquet(attrsDir),
-            () => IndexLayout.appendTailSlice(keepBands, idx, "bands", eff),
-            () => IndexLayout.appendTailSlice(
-              keepSh.filter(size(col("shingles")) > 0),
-              idx, "shingles", eff)) ++ windowWrites): _*)
-          commitBatch(s, root, eff, bMax)
+              .parquet(s"${liveRelDir(s, root, "admissions")}/batch_id=$eff")
+            // re-read the just-committed verdicts: breaks the plan lineage to
+            // the index (Spark refuses to overwrite a path its plan reads)
+            // and makes every later write a pure function of on-disk state
+            val admitted = s.read.parquet(liveRelDir(s, root, "admissions"))
+              .filter(col("batch_id") === eff && col("status") === "new")
+              .select("doc_id")
+            if (admitted.isEmpty) {
+              // everything dropped: the admissions verdicts + manifest ARE
+              // the batch's committed state (no attrs dir, no index slices,
+              // no LM — exactly what admission-then-tagging would leave)
+              commitBatch(s, root, eff, bMax)
+            } else {
+              val survivors = docs.join(hinted(admitted), "doc_id")
+              // the frozen LM seeds from the first batch that ADMITS
+              // anything: "no committed batch has an attrs partition yet"
+              // (a committed manifest without attrs = a zero-survivor batch).
+              // Committed evidence survives compaction in three forms: the
+              // cumulative manifest's lmSeeded flag, the folded batch_id=-1
+              // attrs slice, and (for the crash window where manifests fold
+              // before attrs do) any attrs dir at or below the folded max —
+              // a batch id can only have an attrs dir if it committed one.
+              val cum = cumulative(s, root)
+              val cumMax = cum.map(_.maxBatch).getOrElse(Long.MinValue)
+              val tagged = cum.exists(_.lmSeeded) ||
+                Fs.list(liveRelDir(s, root, "attrs"), hconf(s)).exists { st =>
+                  val n = st.getPath.getName
+                  n == "batch_id=-1" || (n.startsWith("batch_id=") &&
+                    n.stripPrefix("batch_id=").toLongOption.exists(id =>
+                      id >= 0 && (meta.contains(id) || id <= cumMax)))
+                }
+              if (!tagged) seedLm(s, root, survivors)
+              val attrs = attrRows(s, root, survivors, None, broadcastProbe)
+              val keepSh = newSh.join(hinted(admitted), "doc_id")
+              val keepBands = newBands.join(hinted(admitted), "doc_id")
+              val attrsDir = s"${liveRelDir(s, root, "attrs")}/batch_id=$eff"
+              // optional per-batch context-window emission (q146's chunking,
+              // ONE shared definition — TextOps.contextWindowsOf — so the
+              // streamed union over admitted batches equals the batch answer
+              // over the admitted corpus; IngestSpec pins it). Windows are
+              // per-doc local, so the step is embarrassingly incremental;
+              // conf-gated (default off) because it roughly doubles the
+              // batch's output bytes, a cost only window-training consumers
+              // should pay. Idempotent like every write here (per-batch-dir
+              // overwrite); windows are a dataset OUTPUT artifact, so
+              // compaction leaves its per-batch shards in place (they are
+              // the natural training-shard layout) — replays after
+              // compaction are no-ops at openBatch and never touch them.
+              val emitWindows =
+                s.conf.getOption(EmitWindowsKey).exists(_.toBoolean)
+              val windowWrites: Seq[() => Unit] =
+                if (!emitWindows) Seq.empty
+                else Seq(() => TextOps.contextWindowsOf(survivors)
+                  .write.mode("overwrite")
+                  .parquet(s"${liveRelDir(s, root, "windows")}/batch_id=$eff"))
+              awaitAll((Seq[() => Unit](
+                () => attrs.write.mode("overwrite").parquet(attrsDir),
+                () => IndexLayout.appendTailSlice(keepBands, idx, "bands", eff),
+                () => IndexLayout.appendTailSlice(
+                  keepSh.filter(size(col("shingles")) > 0),
+                  idx, "shingles", eff)) ++ windowWrites): _*)
+              commitBatch(s, root, eff, bMax)
+            }
+          }
         }
-      } finally {
-        newSh.unpersist(); newBands.unpersist()
-        lowQ.foreach(_.unpersist())
-        wrongLang.foreach(_.unpersist())
-        if (cands != null) cands.unpersist()
       }
     }
 
-  /** The batch's (attrs, shingles, bands, verified dup pairs, cleanup)
-    * plans against the CURRENT resident state — split from
-    * [[appendBatch]] so the plans can be inspected without writing.
-    * Call `cleanup` when done with the plans (it releases the
-    * batch-sized persisted relations). */
-  private[graft] def batchPlans(s: SparkSession, root: String,
-      docs: DataFrame, broadcastProbe: Boolean = true, batchId: Long = -1L)
-      : (DataFrame, DataFrame, DataFrame, DataFrame, () => Unit) = {
+  /** Runs `body` with the batch's (attrs, shingles, bands, verified dup
+    * pairs) plans against the CURRENT resident state — split from
+    * [[appendBatch]] so the plans can be inspected without writing. The
+    * batch-sized relations the plans read are loaned for the body. */
+  private[graft] def batchPlans[A](s: SparkSession, root: String,
+      docs: DataFrame, broadcastProbe: Boolean = true, batchId: Long = -1L)(
+      body: (DataFrame, DataFrame, DataFrame, DataFrame) => A): A = {
     val idx = indexDir(root)
     val eff =
       if (batchId >= 0) batchId
@@ -672,22 +644,27 @@ object IncrAttrTable {
       if (exists(s, s"$idx/_buckets")) IndexLayout.numBuckets(s, idx)
       else IndexLayout.initMeta(s, idx)
 
-    // batch-sized relations, consumed by several joins below and by the
-    // index writes — persisted for the lifetime of this append
-    val newSh = DedupQs.shinglesOf(docs).persist()
-    val newBands = DedupQs.minhashBandsOf(newSh).persist()
-
-    val (pairsResident, pairsBatch, candsResident) =
-      dupProbe(s, root, nb, newSh, newBands, broadcastProbe, eff)
-    val dupIds = dupIdsOf(pairsResident.unionByName(pairsBatch))
-
-    val attrs = attrRows(s, root, docs, Some(dupIds), broadcastProbe)
-    val done = () => {
-      newSh.unpersist(); newBands.unpersist(); candsResident.unpersist(); ()
+    withBatchBands(docs) { (newSh, newBands) =>
+      dupProbe(s, root, nb, newSh, newBands, broadcastProbe, eff) {
+          (pairsResident, pairsBatch) =>
+        val pairs = pairsResident.unionByName(pairsBatch)
+        val attrs = attrRows(s, root, docs, Some(dupIdsOf(pairs)), broadcastProbe)
+        body(attrs, newSh, newBands, pairs.distinct())
+      }
     }
-    (attrs, newSh, newBands,
-      pairsResident.unionByName(pairsBatch).distinct(), done)
   }
+
+  /** Runs `body` with the batch's shingles and minhash bands loaned:
+    * batch-sized relations consumed by several joins and by the index
+    * writes. The bands are loaned second, so their cache reads the
+    * shingle cache. */
+  private def withBatchBands[A](docs: DataFrame)(
+      body: (DataFrame, DataFrame) => A): A =
+    graft.Memo.leased(DedupQs.shinglesOf(docs)) { newSh =>
+      graft.Memo.leased(DedupQs.minhashBandsOf(newSh)) { newBands =>
+        body(newSh, newBands)
+      }
+    }
 
   /** The dup probe against the CURRENT resident state: batch bands vs
     * resident (bucket-pruned read) plus the within-batch self-join,
@@ -700,8 +677,8 @@ object IncrAttrTable {
     * per append plus a Spark 4.1 semi-through-union planner bug (see
     * round-14 history in git).
     *
-    * Returns (resident-dup PAIRS, within-batch-dup PAIRS, the PERSISTED
-    * resident-candidate relation — caller unpersists). Pairs are
+    * Runs `body` with (resident-dup PAIRS, within-batch-dup PAIRS); the
+    * resident-candidate relation both read is loaned for it. Pairs are
     * (doc_a, doc_b) with doc_a < doc_b (monotone ids put the resident
     * side on doc_a by construction); callers derive dup doc ids as the
     * distinct doc_b side, and the label maintenance ([[labelDelta]] —
@@ -709,9 +686,9 @@ object IncrAttrTable {
     * stream. The two relations stay separate so the admission form
     * ([[ingestBatch]]) can grade `dup_corpus` vs `dup_batch`; the
     * tagging form unions them into one `is_dup`. */
-  private def dupProbe(s: SparkSession, root: String, nb: Int,
+  private def dupProbe[A](s: SparkSession, root: String, nb: Int,
       newSh: DataFrame, newBands: DataFrame, broadcastProbe: Boolean,
-      eff: Long): (DataFrame, DataFrame, DataFrame) = {
+      eff: Long)(body: (DataFrame, DataFrame) => A): A = {
     val idx = indexDir(root)
     val bSide = DedupOps.capBuckets(
         newBands, Seq("band_idx", "band_hash"), DedupQs.MaxBucket)
@@ -726,11 +703,6 @@ object IncrAttrTable {
       .distinct().collect().map(_.getInt(0)).toSeq
     val residentBands =
       IndexLayout.residentSlice(s, idx, "bands", eff, probeBuckets, BandsSchema)
-    val candsResident = residentBands
-      .select(col("doc_id").as("doc_a"), col("band_idx"), col("band_hash"))
-      .join(bProbe, Seq("band_idx", "band_hash"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b").distinct().persist()
     val candsBatch = newBands
       .select(col("doc_id").as("doc_a"), col("band_idx"), col("band_hash"))
       .join(bProbe, Seq("band_idx", "band_hash"))
@@ -757,17 +729,23 @@ object IncrAttrTable {
           lit(4) * (size(col("sh_a")) + size(col("sh_b")))))
         .select(col("doc_a"), col("doc_b"))
     }
-    // the resident shingle verify reads only the candidate docs' id
-    // buckets — second bounded collect, off the persisted candidate
-    // relation (which also keeps later actions from re-running the
-    // resident band probe)
-    val candBuckets = candsResident
-      .select(docBucket(nb, col("doc_a")).as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    val residentSh = IndexLayout.residentSlice(s, idx, "shingles", eff,
-      candBuckets, ShinglesSchema)
-    (verify(candsResident, residentSh).distinct(),
-      verify(candsBatch, newSh).distinct(), candsResident)
+    graft.Memo.leased(residentBands
+        .select(col("doc_id").as("doc_a"), col("band_idx"), col("band_hash"))
+        .join(bProbe, Seq("band_idx", "band_hash"))
+        .filter(col("doc_a") < col("doc_b"))
+        .select("doc_a", "doc_b").distinct()) { candsResident =>
+      // the resident shingle verify reads only the candidate docs' id
+      // buckets — second bounded collect, off the persisted candidate
+      // relation (which also keeps later actions from re-running the
+      // resident band probe)
+      val candBuckets = candsResident
+        .select(docBucket(nb, col("doc_a")).as("b"))
+        .distinct().collect().map(_.getInt(0)).toSeq
+      val residentSh = IndexLayout.residentSlice(s, idx, "shingles", eff,
+        candBuckets, ShinglesSchema)
+      body(verify(candsResident, residentSh).distinct(),
+        verify(candsBatch, newSh).distinct())
+    }
   }
 
   /** The distinct dup doc ids of a verified pair relation — the doc_b
@@ -1091,14 +1069,9 @@ object IncrAttrTable {
       val folded =
         if (rel == "labels") rows.groupBy("doc_id").agg(min(col("comp")).as("comp"))
         else rows
-      // parts = 0: AQE sizes the fold's file count from the DATA (a
-      // KB-scale artifact folds to one file; q151's selection plan
-      // scans attrs five times, and a 32-way fold made each of those
-      // scans a 32-task stage of pure reader-init overhead)
       SinkOps.rangedSortedParquet(
         folded, "doc_id",
         s"$root/$rel/gen=${g + 1}/batch_id=-1",
-        parts = 0,
         maxRecordsPerFile = 5000000L)
       Fs.writeAtomic(s"$root/$rel/_gen",
         (g + 1).toString.getBytes("UTF-8"), hconf(s))

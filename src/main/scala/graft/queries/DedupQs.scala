@@ -228,7 +228,7 @@ object DedupQs {
     * recall only for Hamming <= nBands-1 = 7 (pigeonhole); everything
     * above that is opportunistic recall through a lucky band collision.
     * Measured true J>=0.8 pairs on this corpus family reach Hamming 9 at
-    * sf0.01 (`tools/SimhashProbe`) and 11 at sf0.1 (BASELINE.md), i.e.
+    * sf0.01 and 11 at sf0.1 (SURVEY §2.0.-1, BASELINE.md q37 row), i.e.
     * the true-pair tail GROWS with scale — so the cutoff carries 5 bits
     * of margin over the largest measured tier rather than 1. 16 still
     * sits at the lower edge of the random-collision Hamming mode (~16 of

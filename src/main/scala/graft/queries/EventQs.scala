@@ -568,7 +568,7 @@ object EventQs {
   val q111 = Q(
     "q111_overlap_join",
     (s, d) => {
-      // both self-join sides consume sess — persist so the events scan +
+      // both self-join sides consume sess — memoize so the events scan +
       // sessionization runs once (the q87/q106 lesson; nothing pins that
       // ReuseExchange would dedupe the two aggregate subtrees).
       // Cache width pinned to the session's shuffle width (round 22):
@@ -577,13 +577,15 @@ object EventQs {
       // bytes-based cache coalescing would run the explode+join nearly
       // serial (the q37 lesson — measured +32% on this row before the
       // pin). user_id keys the replication deterministically.
-      val sess = graft.Memo.ensurePersisted(Tables.events(s, d)
-        .groupBy(session_window(col("event_ts"), "10 minutes").as("w"),
-          col("user_id"))
-        .agg(unix_micros(min(col("event_ts"))).as("ss"),
-          unix_micros(max(col("event_ts"))).as("se"))
-        .select("user_id", "ss", "se")
-        .repartition(s.sessionState.conf.numShufflePartitions, col("user_id")))
+      val sess = graft.Memo.cached(s, d, "q111_sessions") {
+        Tables.events(s, d)
+          .groupBy(session_window(col("event_ts"), "10 minutes").as("w"),
+            col("user_id"))
+          .agg(unix_micros(min(col("event_ts"))).as("ss"),
+            unix_micros(max(col("event_ts"))).as("se"))
+          .select("user_id", "ss", "se")
+          .repartition(s.sessionState.conf.numShufflePartitions, col("user_id"))
+      }
       val a = sess.select(col("user_id").as("user_a"),
         col("ss").as("sa"), col("se").as("ea"))
       val b = sess.select(col("user_id").as("user_b"),

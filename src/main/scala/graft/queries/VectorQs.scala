@@ -172,16 +172,10 @@ object VectorQs {
     }
   }
 
-  /** `trainedIndex = false` swaps the raw `%50` seed centroids back in —
-    * the UNTRAINED index, kept only so `tools.RecallCurve` can measure
-    * what the Lloyd update buys at each probe budget (the graded q42 and
-    * every production path use the trained default). */
+  /** q42's body; `idCap` as in [[fifties]]. */
   private[graft] def ivfQuery(s: SparkSession, d: String,
-      idCap: Long = Long.MaxValue, trainedIndex: Boolean = true): DataFrame = {
-      val cents =
-        if (trainedIndex) trainedCents(s, d, idCap)
-        else fifties(s, d, idCap)
-          .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
+      idCap: Long = Long.MaxValue): DataFrame = {
+      val cents = trainedCents(s, d, idCap)
       val assigned = VectorOps.ivfAssign(corpus(s, d), cents)
       val wProbe = Window.partitionBy("qid").orderBy(col("pcos").desc, col("cid"))
       val probes = queries(s, d)
@@ -450,8 +444,8 @@ object VectorQs {
     *    §2.0.2 calibration — the 128-table/T=64 rung at 200 k vectors
     *    = 1.638 G expansion rows died at ENOSPC with ~77 GB written
     *    → ~47 B/row, rounded up to 48;
-    *  - zstd: round-19 per-task instrumentation
-    *    (`SrpMultiProbe --calibrate`) measured 28.6–29.0 B/row at the
+    *  - zstd: round-19 per-task instrumentation (SURVEY §2.0.2, the
+    *    scratch-gate calibration) measured 28.6–29.0 B/row at the
     *    50 k 32/128-table rungs → 32, still rounded up.
     * Unknown codecs take the larger lz4 constant — over-refusing is
     * the safe direction for an ENOSPC gate. The dominant term is the
@@ -594,9 +588,8 @@ object VectorQs {
   private val log = org.apache.logging.log4j.LogManager.getLogger(getClass)
 
   /** q139's body with width and table count as parameters — the graded
-    * query pins one (bandBits, L) point; `tools.SrpMultiProbe` sweeps L
-    * at each width to record the recall-vs-L curve beside the width
-    * ladder (SURVEY §2.0.2). Same cap-join-verify pipeline as q43, over
+    * query pins one (bandBits, L) point; the recall-vs-L curve beside
+    * the width ladder is recorded in SURVEY §2.0.2. Same cap-join-verify pipeline as q43, over
     * [[VectorOps.srpBandsMulti]]'s L-matrix band relation.
     *
     * DENSITY-ROUTED: before the band self-join runs, the capped
@@ -917,8 +910,8 @@ object VectorQs {
   }
 
   /** q139's graded configuration: 4 independent 64-plane matrices at the
-    * 8-bit width = 32 tables. Chosen on `SrpMultiProbe` measurement at
-    * sf0.01 (14 exact cos ≥ 0.45 pairs): recall 0.857 at L=4 vs q43's
+    * 8-bit width = 32 tables. Chosen on the recall-vs-L curve
+    * (SURVEY §2.0.2) at sf0.01 (14 exact cos ≥ 0.45 pairs): recall 0.857 at L=4 vs q43's
     * single-set 0.286, with candidates growing linearly in L
     * (4 478 → 16 695). The measured refutation that sits beside it: at
     * the 16-bit width NO feasible L reaches the 8-bit floor on this
@@ -939,8 +932,8 @@ object VectorQs {
     * matrices inline into the oracle as exact-decimal double literals,
     * and every stage — sign bits, bucket packs, union join, verify —
     * is the same deterministic function of them in both engines.
-    * `SrpMultiProbe` records the recall-vs-L curve (SURVEY §2.0.2);
-    * `DedupVectorSpec` pins the measured recall floor.
+    * SURVEY §2.0.2 records the recall-vs-L curve; `DedupVectorSpec`
+    * pins the measured recall floor.
     *
     * Shape at scale: one fused projection stage computes all L packed
     * signatures (L small codegen loops — far under the JIT-limit

@@ -179,71 +179,79 @@ object DocStream {
     * the partitions of the first attempt. Package-visible so specs can
     * drive it directly. */
   private[graft] def admitBatch(docs: DataFrame, indexDir: String,
-      outDir: String, batchId: Long): Unit = {
+      outDir: String, batchId: Long): Unit =
+    gated(docs) { (wrongLang, lowQ, eligible) =>
+      graft.Memo.leased(eligible
+          .select(col("doc_id"), TextOps.shingleHashes(col("text")).as("shingles"))
+          .filter(size(col("shingles")) > 0)) { sh =>
+        graft.Memo.leased(DedupOps.minhashBands(sh, "doc_id", numPerm = 64, bands = 16)) { bands =>
+          admitShingled(docs, wrongLang, lowQ, sh, bands, indexDir, outDir, batchId)
+        }
+      }
+    }
+
+  /** The admission gates, shared with
+    * [[graft.pipeline.IncrAttrTable.ingestBatch]]: runs `body` with the
+    * loaned doc_id relations of the docs the optional language gate
+    * (see LangAllowConfKey) and quality gate (see MinScoreConfKey)
+    * reject, plus the docs that pass both. The language gate runs
+    * FIRST — rejected docs skip the quality scorer, the shingler and
+    * the index, so everything downstream of lang-id sees one language;
+    * quality-rejected docs are excluded from shingling, so they produce
+    * no candidates, classify as nothing but low_quality, and never
+    * enter the index. Each flag feeds both the eligibility anti-join
+    * and the final status projection, hence the loans. */
+  private[graft] def gated[A](docs: DataFrame)(
+      body: (Option[DataFrame], Option[DataFrame], DataFrame) => A): A = {
+    val conf = docs.sparkSession.conf
+    graft.Memo.leased(conf.getOption(LangAllowConfKey).map { csv =>
+      val allow = csv.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+      TextOps.langIdScoresOf(docs)
+        .filter(!col("pred_lang").isin(allow: _*))
+        .select(col("doc_id"))
+    }) { wrongLang =>
+      val postLang = wrongLang.fold(docs)(w => docs.join(w, Seq("doc_id"), "left_anti"))
+      graft.Memo.leased(conf.getOption(MinScoreConfKey).map(_.toLong).map { m =>
+        TextOps.modelScoresOf(postLang).filter(col("score") <= m)
+          .select(col("doc_id"))
+      }) { lowQ =>
+        body(wrongLang, lowQ,
+          lowQ.fold(postLang)(l => postLang.join(l, Seq("doc_id"), "left_anti")))
+      }
+    }
+  }
+
+  /** [[admitBatch]]'s classification and index writes, over the batch's
+    * loaned gate flags, shingles and bands. */
+  private def admitShingled(docs: DataFrame, wrongLang: Option[DataFrame],
+      lowQ: Option[DataFrame], sh: DataFrame, bands: DataFrame,
+      indexDir: String, outDir: String, batchId: Long): Unit = {
     val spark = docs.sparkSession
     val nb = IndexLayout.numBuckets(spark, indexDir)
-    // optional language gate FIRST (see LangAllowConfKey): rejected
-    // docs skip the quality scorer, the shingler, and the index —
-    // everything downstream of lang-id sees one language. Persisted for
-    // the same two consumers as the quality flag.
-    val wrongLang: Option[DataFrame] =
-      spark.conf.getOption(LangAllowConfKey).map { csv =>
-        val allow = csv.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-        TextOps.langIdScoresOf(docs)
-          .filter(!col("pred_lang").isin(allow: _*))
-          .select(col("doc_id")).persist()
-      }
-    val postLang = wrongLang match {
-      case Some(w) => docs.join(w, Seq("doc_id"), "left_anti")
-      case None => docs
-    }
-    // optional quality gate (see MinScoreConfKey): rejected docs are
-    // excluded from shingling, so they produce no candidates, classify
-    // as nothing but low_quality, and never enter the index. Persisted
-    // because the flag feeds both the eligibility anti-join and the
-    // final status projection.
-    val lowQ: Option[DataFrame] =
-      spark.conf.getOption(MinScoreConfKey).map(_.toLong).map { m =>
-        TextOps.modelScoresOf(postLang).filter(col("score") <= m)
-          .select(col("doc_id")).persist()
-      }
-    val eligible = lowQ match {
-      case Some(l) => postLang.join(l, Seq("doc_id"), "left_anti")
-      case None => postLang
-    }
-    val sh = eligible
-      .select(col("doc_id"), TextOps.shingleHashes(col("text")).as("shingles"))
-      .filter(size(col("shingles")) > 0)
-      .persist()
-    val bands = DedupOps.minhashBands(sh, "doc_id", numPerm = 64, bands = 16)
-      .persist()
-    var candsCorpus: DataFrame = null
-    try {
-      // which index buckets can this batch's band lookups possibly hit?
-      // A bounded driver-side scalar (≤ nb ints) off the persisted batch
-      // bands — the price of turning the index read from O(index) into
-      // O(batch's buckets).
-      val streamBuckets = bands.select(bandBucket(nb).cast("int").as("b"))
-        .distinct().collect().map(_.getInt(0)).toSeq
+    // which index buckets can this batch's band lookups possibly hit?
+    // A bounded driver-side scalar (≤ nb ints) off the persisted batch
+    // bands — the price of turning the index read from O(index) into
+    // O(batch's buckets).
+    val streamBuckets = bands.select(bandBucket(nb).cast("int").as("b"))
+      .distinct().collect().map(_.getInt(0)).toSeq
 
-      // the index is the relation that grows without bound as admissions
-      // accumulate — the same oversized-bucket straggler guard the batch
-      // paths apply (inert below the cap, bounds per-trigger pair
-      // generation when a band bucket goes hot). Partition pruning on
-      // batch_id < batchId excludes any half-written rows a crashed
-      // first attempt of THIS batch left behind — replay classifies
-      // against exactly the pre-batch index.
-      val idxBands = DedupOps.capBuckets(
-        IndexLayout.residentSlice(spark, indexDir, "bands", batchId,
-          streamBuckets, BandsSchema),
-        Seq("band_idx", "band_hash"), 1000)
+    // the index is the relation that grows without bound as admissions
+    // accumulate — the same oversized-bucket straggler guard the batch
+    // paths apply (inert below the cap, bounds per-trigger pair
+    // generation when a band bucket goes hot). Partition pruning on
+    // batch_id < batchId excludes any half-written rows a crashed
+    // first attempt of THIS batch left behind — replay classifies
+    // against exactly the pre-batch index.
+    val idxBands = DedupOps.capBuckets(
+      IndexLayout.residentSlice(spark, indexDir, "bands", batchId,
+        streamBuckets, BandsSchema),
+      Seq("band_idx", "band_hash"), 1000)
 
-      val streamSide = bands.select(col("doc_id").as("doc_b"), col("band_idx"), col("band_hash"))
-      candsCorpus = streamSide
+    val streamSide = bands.select(col("doc_id").as("doc_b"), col("band_idx"), col("band_hash"))
+    graft.Memo.leased(streamSide
         .join(idxBands.select(col("doc_id").as("doc_a"), col("band_idx"), col("band_hash")),
           Seq("band_idx", "band_hash"))
-        .select("doc_a", "doc_b").distinct()
-        .persist()
+        .select("doc_a", "doc_b").distinct()) { candsCorpus =>
       val candsBatch = bands
         .select(col("doc_id").as("doc_a"), col("band_idx"), col("band_hash"))
         .join(streamSide, Seq("band_idx", "band_hash"))
@@ -314,12 +322,6 @@ object DocStream {
           .withColumn("bucket", bandBucket(nb))
           .withColumn("batch_id", lit(batchId)),
         indexDir, "bands", dynamic = true)
-    } finally {
-      sh.unpersist()
-      bands.unpersist()
-      lowQ.foreach(_.unpersist())
-      wrongLang.foreach(_.unpersist())
-      if (candsCorpus != null) candsCorpus.unpersist()
     }
   }
 }

@@ -129,8 +129,7 @@ object MediaStream {
       outDir: String, batchId: Long): Unit = {
     val spark = media.sparkSession
     val nb = IndexLayout.numBuckets(spark, indexDir)
-    val batchBands = MultimodalOps.phashBands(hashesOf(media)).persist()
-    try {
+    graft.Memo.leased(MultimodalOps.phashBands(hashesOf(media))) { batchBands =>
       // the batch can only collide inside its own band buckets — read
       // only those bucket dirs (bounded driver-side scalar off the
       // persisted bands, ≤ min(4·batch, nb) ints; DocStream's posture)
@@ -183,8 +182,6 @@ object MediaStream {
           .withColumn("bucket", bucket(nb))
           .withColumn("batch_id", lit(batchId)),
         indexDir, "fingerprints", dynamic = true)
-    } finally {
-      batchBands.unpersist()
     }
   }
 }

@@ -144,12 +144,10 @@ object VecStream {
       outDir: String, batchId: Long): Unit = {
     val spark = vecs.sparkSession
     val nb = IndexLayout.numBuckets(spark, indexDir)
-    val assigned = VectorOps.ivfAssign(
+    graft.Memo.leased(VectorOps.ivfAssign(
         vecs.filter(col("embedding").isNotNull)
           .select(col("vec_id").as("id"), col("embedding").as("vec")),
-        spark.read.parquet(s"$indexDir/centroids"))
-      .persist()
-    try {
+        spark.read.parquet(s"$indexDir/centroids"))) { assigned =>
       // the batch can only collide inside its own assigned cells — read
       // only those cells' bucket dirs (bounded driver-side scalar off
       // the persisted assignment, ≤ nb ints; DocStream's posture)
@@ -201,8 +199,6 @@ object VecStream {
           .withColumn("bucket", cellBucket(nb))
           .withColumn("batch_id", lit(batchId)),
         indexDir, "vectors", dynamic = true)
-    } finally {
-      assigned.unpersist()
     }
   }
 

@@ -417,7 +417,7 @@ object ScaleEvidence {
       srpAtWidth(s, d, 32)),
     // round 14: the L-table recall amplifier — 4 matrices × 8 tables;
     // band rows grow 4× q43's (O(vectors × 32)), candidates grow ~4×
-    // linearly in L (SrpMultiProbe's curve), verify stays pair-bounded
+    // linearly in L (SURVEY §2.0.2's curve), verify stays pair-bounded
     "q139_srp_multi_lsh" -> ((s: SparkSession, d: String) =>
       Queries.byName("q139_srp_multi_lsh").fn(s, d)))
 

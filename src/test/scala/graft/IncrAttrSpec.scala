@@ -162,14 +162,12 @@ class IncrAttrSpec extends AnyFunSuite {
     IncrAttrTable.appendBatch(spark, root,
       df(Seq(doc(1L, baseText("a")), doc(2L, baseText("b")))))
     val batch = df(Seq(doc(10L, baseText("c")), doc(11L, baseText("d"))))
-    def broadcasts(probe: Boolean): Int = {
-      val (attrs, _, _, _, done) =
-        IncrAttrTable.batchPlans(spark, root, batch, broadcastProbe = probe)
-      try "BroadcastHashJoin".r.findAllIn(
-        attrs.queryExecution.explainString(
-          org.apache.spark.sql.execution.SimpleMode)).length
-      finally done()
-    }
+    def broadcasts(probe: Boolean): Int =
+      IncrAttrTable.batchPlans(spark, root, batch, broadcastProbe = probe) {
+        (attrs, _, _, _) => "BroadcastHashJoin".r.findAllIn(
+          attrs.queryExecution.explainString(
+            org.apache.spark.sql.execution.SimpleMode)).length
+      }
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       assert(broadcasts(probe = true) >= 3,
